@@ -288,14 +288,17 @@ def stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator (applyInPandasWithState):
     per-user running count/sum maintained in the state store across
     micro-batches (streaming/stateful.py). Runs the REAL streaming
-    query with Trigger.AvailableNow over the events table (two
-    micro-batches via maxFilesPerTrigger) and returns the final state
-    per user — which must equal the batch groupBy over the same table,
-    encoded as the DuckDB oracle (the state-store path and the batch
-    path must agree bit-for-bit after cent-safe rounding)."""
+    query with Trigger.AvailableNow over the events table and returns
+    the final state per user — which must equal the batch groupBy over
+    the same table, encoded as the DuckDB oracle (the state-store path
+    and the batch path must agree bit-for-bit after cent-safe
+    rounding). The events table is one file, so ``coalesce(2)`` lands
+    one file and the query runs ONE micro-batch; state carried across
+    batches is covered by tests/test_streaming.py's
+    ``test_stateful_running_totals``, whose fixture lands two files."""
     import tempfile
 
-    from ..streaming.stateful import running_totals
+    from ..streaming.stateful import running_totals, stream_session
     from ..streaming.windows import stream_source
 
     ev = load_table(spark, sf_dir, "events").withColumn(
@@ -305,7 +308,7 @@ def stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = f"{work}/src"
     ev.coalesce(2).write.parquet(src, mode="overwrite")
     schema = spark.read.parquet(src).schema
-    stream = stream_source(spark, src, schema, max_files_per_trigger=1)
+    stream = stream_source(stream_session(spark), src, schema, max_files_per_trigger=1)
     out = f"{work}/out"
     q = (
         running_totals(stream)
@@ -358,7 +361,7 @@ def stateful_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted rows — which must reproduce the original table exactly."""
     import tempfile
 
-    from ..streaming.stateful import stateful_dedup
+    from ..streaming.stateful import stateful_dedup, stream_session
     from ..streaming.windows import stream_source
 
     ev = load_table(spark, sf_dir, "events").withColumn(
@@ -369,7 +372,7 @@ def stateful_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = f"{work}/src"
     doubled.coalesce(2).write.parquet(src, mode="overwrite")
     schema = spark.read.parquet(src).schema
-    stream = stream_source(spark, src, schema, max_files_per_trigger=1)
+    stream = stream_source(stream_session(spark), src, schema, max_files_per_trigger=1)
     out = f"{work}/out"
     q = (
         stateful_dedup(stream)

@@ -8,7 +8,10 @@ the driver harness share one config surface:
   strategy switch) — at 100 TB the static plan is always wrong
   somewhere; AQE fixes partition counts and skew at runtime.
 - shuffle.partitions sized for the local harness (32); on a real
-  cluster AQE's coalescing makes a high initial value safe.
+  cluster AQE's coalescing makes a high initial value safe. AQE does
+  not coalesce stateful-streaming shuffles, so stateful streams take
+  their partition count from the task slots through
+  ``streaming.stateful.stream_session``, not from the global 32.
 - Arrow enabled for any pandas-UDF path (vectorized, batched transfer).
 - Session timezone pinned to UTC: the testdata timestamps are naive
   (timestamp_ntz) and the DuckDB oracle is timezone-less, so every

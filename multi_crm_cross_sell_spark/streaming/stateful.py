@@ -17,6 +17,9 @@ Two operators:
 - ``stateful_dedup``: exactly-once-per-key emission with an optional
   processing-time TTL — streaming dedup where ``dropDuplicates``'s
   unbounded state would OOM; TTL bounds state for 100 TB streams.
+
+Callers start these streams on a :func:`stream_session`, whose state
+partition count is the cluster's task-slot count.
 """
 
 from __future__ import annotations
@@ -24,11 +27,37 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 RUNNING_OUT = "user_id bigint, n_events bigint, total_value double"
 RUNNING_STATE = "n bigint, total double"
+
+
+def stream_session(spark: SparkSession) -> SparkSession:
+    """A child of ``spark`` to start stateful streams on, with one
+    state partition per task slot.
+
+    A stateful operator takes ``spark.sql.shuffle.partitions`` as its
+    partition count, pins it in the checkpoint at first start, and AQE
+    never coalesces it; every micro-batch then loads and commits one
+    state store per partition. At the session-wide 32, four task slots
+    run eight waves of near-empty tasks a micro-batch; at
+    ``defaultParallelism`` (the total core count on a cluster) it is
+    one wave.
+
+    The child is a clone, so it keeps the caller's confs (UTC, Arrow
+    and the rest of ``session.tune``) and SQL execution listeners. A
+    session's streaming listeners see only the queries started on that
+    session, so the caller's are attached to the child as well. The
+    caller's conf is never touched."""
+    child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    child.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
+    for listener in spark.streams._jsqm.listListeners():
+        child.streams._jsqm.addListener(listener)
+    return child
 
 
 def _running_fn(

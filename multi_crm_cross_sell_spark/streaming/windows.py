@@ -43,34 +43,6 @@ def tumbling_agg(events: DataFrame, ts_col: str = "ts", window: str = "1 hour",
     )
 
 
-def sliding_agg(events: DataFrame, ts_col: str = "ts", window: str = "1 hour",
-                slide: str = "15 minutes", watermark: str = "2 hours") -> DataFrame:
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window, slide).alias("w"))
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "n_events")
-    )
-
-
-def session_agg(events: DataFrame, ts_col: str = "ts", gap: str = "30 minutes",
-                watermark: str = "2 hours") -> DataFrame:
-    """Native session windows (session_window) — the streaming form of
-    plans/events.event_sessionization's gaps-and-islands."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap).alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("session_value"))
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "user_id",
-            "n_events",
-            "session_value",
-        )
-    )
-
-
 def run_available_now(stream_df: DataFrame, checkpoint: str, sink_path: str,
                       output_mode: str = "append", fmt: str = "parquet"):
     """ST1: Trigger.AvailableNow batch-over-stream — process everything

@@ -9,6 +9,7 @@ import pytest
 
 
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from multi_crm_cross_sell_spark.sources.bronze import load_table
 from multi_crm_cross_sell_spark.streaming.sinks import foreach_batch_log
@@ -113,6 +114,96 @@ def test_stateful_running_totals(spark, events_dir, tmp_path):
     assert (abs(j["tv"] - j["tv_b"]) < 1e-6).all()
     # two micro-batches -> users seen in both emit twice (update stream)
     assert got.count() >= last.count()
+
+
+class _StatePartitions(StreamingQueryListener):
+    """Records each micro-batch's state partition counts."""
+
+    def __init__(self) -> None:
+        self.batches: list[list[int]] = []
+
+    def onQueryStarted(self, event):  # noqa: N802
+        pass
+
+    def onQueryProgress(self, event):  # noqa: N802
+        self.batches.append(
+            [s.numShufflePartitions for s in event.progress.stateOperators]
+        )
+
+    def onQueryIdle(self, event):  # noqa: N802
+        pass
+
+    def onQueryTerminated(self, event):  # noqa: N802
+        pass
+
+
+@pytest.fixture
+def caller(spark):
+    """A tuned session whose shuffle partition count is not the slot
+    count, and a listener on its streams."""
+    from multi_crm_cross_sell_spark.session import tune
+
+    s = tune(spark.newSession())
+    s.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism + 3)
+    )
+    listener = _StatePartitions()
+    s.streams.addListener(listener)
+    return s, listener
+
+
+def _drain_listeners(spark):
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+
+
+def test_stream_session_one_state_partition_per_slot(spark, caller, events_dir, tmp_path):
+    """``stream_session`` gives the stateful operator one state
+    partition per task slot, on a child that keeps the engine confs,
+    leaves the caller's conf as it was, and reports its progress to the
+    caller's streaming listeners."""
+    from multi_crm_cross_sell_spark.streaming.stateful import (
+        running_totals,
+        stream_session,
+    )
+
+    parent, listener = caller
+    slots = spark.sparkContext.defaultParallelism
+    before = parent.conf.getAll
+    child = stream_session(parent)
+    assert child.conf.get("spark.sql.session.timeZone") == "UTC"
+
+    src = str(events_dir / "src")
+    schema = parent.read.parquet(src).schema
+    stream = stream_source(child, src, schema, max_files_per_trigger=1)
+    q = (
+        running_totals(stream)
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(300)
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == slots
+    _drain_listeners(spark)
+    assert listener.batches == [[slots], [slots]]
+    assert parent.conf.getAll == before
+
+
+@pytest.mark.parametrize("name", ["stateful_running_totals", "stateful_streaming_dedup"])
+def test_stateful_queries_stream_on_slots(spark, caller, name):
+    """Both stateful plans stream on ``stream_session`` and leave the
+    caller's conf byte-identical."""
+    from multi_crm_cross_sell_spark.plans import all_queries
+
+    parent, listener = caller
+    before = parent.conf.getAll
+    assert all_queries()[name].fn(parent, SF).count() > 0
+    _drain_listeners(spark)
+    slots = spark.sparkContext.defaultParallelism
+    assert listener.batches
+    assert all(parts == [slots] for parts in listener.batches)
+    assert parent.conf.getAll == before
 
 
 def test_stateful_running_totals_tws(spark, events_dir, tmp_path):
