@@ -1025,7 +1025,7 @@ def _local_cents_frame(spark, scalar_cols, prefix: str, M) -> DataFrame:
         StructType,
     )
 
-    n, dim = M.shape
+    dim = M.shape[1]
     tmap = {"bigint": LongType(), "int": IntegerType()}
     npmap = {"bigint": np.int64, "int": np.int32}
     fields = [StructField(nm, tmap[t], False) for nm, t, _ in scalar_cols]
@@ -1034,34 +1034,10 @@ def _local_cents_frame(spark, scalar_cols, prefix: str, M) -> DataFrame:
     cols = {nm: arr.astype(npmap[t]) for nm, t, arr in scalar_cols}
     for i in range(dim):
         cols[f"{prefix}_{i}"] = M[:, i]
-    pdf = pd.DataFrame(cols)
-    # The pandas-with-Arrow path yields a true LocalRelation (values
-    # bit-exact through Arrow float64), so downstream broadcast builds
-    # collect driver-side with ZERO jobs; the conf is a runtime SQL
-    # conf, default-off on a vanilla session (the driver's), so set it
-    # for the createDataFrame call and restore. Fallback: an explicit
-    # 1-slice parallelize — RDD-backed, but each broadcast build is
-    # then one 1-task job instead of a cores-wide scan (PySpark's
-    # createDataFrame(list) parallelizes over defaultParallelism
-    # slices; measured 2 × 32-task jobs, 0.91 s of ann_ivf2_topk's
-    # sf0.1 wall).
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    try:
-        prev = spark.conf.get(key)
-        spark.conf.set(key, "true")
-        try:
-            return spark.createDataFrame(pdf, schema)
-        finally:
-            spark.conf.set(key, prev)
-    except Exception:
-        data = [
-            tuple(int(arr[r]) for _, _, arr in scalar_cols)
-            + tuple(float(x) for x in M[r])
-            for r in range(n)
-        ]
-        return spark.createDataFrame(
-            spark.sparkContext.parallelize(data, 1), schema
-        )
+    # With Arrow on (``session.tune`` sets it on every entry path) this
+    # is a true LocalRelation, bit-exact through Arrow float64, so
+    # downstream broadcast builds collect driver-side with zero jobs.
+    return spark.createDataFrame(pd.DataFrame(cols), schema)
 
 
 def _half_up_exact(x):

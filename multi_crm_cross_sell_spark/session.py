@@ -20,8 +20,13 @@ the driver harness share one config surface:
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import tempfile
+import warnings
 
+from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
@@ -62,46 +67,45 @@ def _ship_package(spark: SparkSession) -> None:
     reference, so a worker spawned by a driver that imported us via a
     sys.path hack from another cwd raises ModuleNotFoundError at the
     first UDF batch. addPyFile of a package zip fixes that for every
-    session shape. Idempotent per JVM (addPyFile dedups by filename);
-    failures are non-fatal because the common layouts (cwd=repo, or
-    PYTHONPATH set) never needed it."""
+    session shape. Idempotent per JVM (addPyFile dedups by filename).
+    A failure is non-fatal, because the common layouts (cwd=repo, or
+    PYTHONPATH set) never needed the zip, but it is raised as a
+    warning."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     try:
-        import os
-        import shutil
-        import tempfile
-
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        stamp = os.path.join(
-            tempfile.gettempdir(), "multi_crm_cross_sell_spark_pkg"
+        spark.sparkContext.addPyFile(_package_zip(root))
+    except (OSError, Py4JError) as e:
+        warnings.warn(
+            f"engine package not shipped to Python workers: {e!r}",
+            RuntimeWarning,
+            stacklevel=2,
         )
-        # Rebuild when any package source is newer than the cached
-        # zip (round 14): a zip cached by an EARLIER session otherwise
-        # ships stale UDF code to the Python workers — cloudpickle
-        # serializes pandas-UDF closures by reference, so the worker
-        # resolves module attributes against the zip's old copy and
-        # dies with AttributeError (or, worse, silently runs old
-        # logic) after any edit to a UDF-referenced module.
-        src_mtime = 0.0
-        pkg_dir = os.path.join(root, "multi_crm_cross_sell_spark")
-        for dirpath, _dirnames, filenames in os.walk(pkg_dir):
-            for fn in filenames:
-                if fn.endswith(".py"):
-                    src_mtime = max(
-                        src_mtime, os.path.getmtime(os.path.join(dirpath, fn))
-                    )
-        if (
-            not os.path.exists(stamp + ".zip")
-            or os.path.getmtime(stamp + ".zip") <= src_mtime
-        ):
-            shutil.make_archive(
-                stamp,
-                "zip",
-                root_dir=root,
-                base_dir="multi_crm_cross_sell_spark",
-            )
-        spark.sparkContext.addPyFile(stamp + ".zip")
-    except Exception:
-        pass
+
+
+def _package_zip(root: str) -> str:
+    """Path of a zip of ``root``'s engine package, rebuilt when any
+    package source is newer than it. A zip cached by an EARLIER session
+    otherwise ships stale UDF code to the Python workers: cloudpickle
+    serializes pandas-UDF closures by reference, so the worker resolves
+    module attributes against the zip's old copy and dies with
+    AttributeError (or, worse, silently runs old logic) after any edit
+    to a UDF-referenced module. The name carries a hash of ``root``, so
+    two checkouts sharing a temp dir never ship each other's code: an
+    mtime check alone would take a newer zip built from another
+    checkout as current."""
+    tag = hashlib.sha1(root.encode()).hexdigest()[:12]
+    base = os.path.join(tempfile.gettempdir(), f"multi_crm_cross_sell_spark_pkg_{tag}")
+    src_mtime = 0.0
+    pkg_dir = os.path.join(root, "multi_crm_cross_sell_spark")
+    for dirpath, _dirnames, filenames in os.walk(pkg_dir):
+        for fn in filenames:
+            if fn.endswith(".py"):
+                src_mtime = max(src_mtime, os.path.getmtime(os.path.join(dirpath, fn)))
+    if not os.path.exists(base + ".zip") or os.path.getmtime(base + ".zip") <= src_mtime:
+        shutil.make_archive(
+            base, "zip", root_dir=root, base_dir="multi_crm_cross_sell_spark"
+        )
+    return base + ".zip"
 
 
 def get_spark(

@@ -24,6 +24,7 @@ partition count is the cluster's task-slot count.
 
 from __future__ import annotations
 
+import weakref
 from collections.abc import Iterator
 
 import pandas as pd
@@ -32,6 +33,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 RUNNING_OUT = "user_id bigint, n_events bigint, total_value double"
 RUNNING_STATE = "n bigint, total double"
+
+_stream_children: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def stream_session(spark: SparkSession) -> SparkSession:
@@ -47,16 +50,29 @@ def stream_session(spark: SparkSession) -> SparkSession:
     one wave.
 
     The child is a clone, so it keeps the caller's confs (UTC, Arrow
-    and the rest of ``session.tune``) and SQL execution listeners. A
-    session's streaming listeners see only the queries started on that
-    session, so the caller's are attached to the child as well. The
-    caller's conf is never touched."""
-    child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
-    child.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    for listener in spark.streams._jsqm.listListeners():
-        child.streams._jsqm.addListener(listener)
+    and the rest of ``session.tune``) as of the first call, and its SQL
+    execution listeners. A session's streaming listeners see only the
+    queries started on that session, so the child's are re-synced to
+    the caller's on every call. Each caller gets one child: a session
+    that starts a stream registers a listener bus on the SparkContext
+    for good, so a fresh child per call added one bus a call (Spark
+    itself still adds one per stateful query it starts). The caller's
+    conf is never touched."""
+    child = _stream_children.get(spark)
+    if child is None:
+        child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+        child.conf.set(
+            "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+        )
+        _stream_children[spark] = child
+    want = list(spark.streams._jsqm.listListeners())
+    have = list(child.streams._jsqm.listListeners())
+    for listener in have:
+        if listener not in want:
+            child.streams._jsqm.removeListener(listener)
+    for listener in want:
+        if listener not in have:
+            child.streams._jsqm.addListener(listener)
     return child
 
 

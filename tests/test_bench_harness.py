@@ -189,21 +189,46 @@ def test_ship_package_rebuilds_stale_zip(spark, tmp_path, monkeypatch):
     from multi_crm_cross_sell_spark import session as sess
 
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-    stamp = os.path.join(str(tmp_path), "multi_crm_cross_sell_spark_pkg")
 
     sess._ship_package(spark)
-    assert os.path.exists(stamp + ".zip")
+    [zip_path] = tmp_path.glob("multi_crm_cross_sell_spark_pkg*.zip")
 
     # Make the cached zip look older than the sources: next call must
     # rebuild (mtime strictly advances past the planted stale value).
-    os.utime(stamp + ".zip", (1.0, 1.0))
+    os.utime(zip_path, (1.0, 1.0))
     sess._ship_package(spark)
-    assert os.path.getmtime(stamp + ".zip") > 1.0
-    with zipfile.ZipFile(stamp + ".zip") as z:
+    assert os.path.getmtime(zip_path) > 1.0
+    with zipfile.ZipFile(zip_path) as z:
         src = z.read(
             "multi_crm_cross_sell_spark/functions/similarity.py"
         ).decode()
     assert "_jw_floor_batch" in src  # current source, not a stale copy
+
+
+def test_package_zip_is_keyed_on_the_checkout(tmp_path, monkeypatch):
+    """Two checkouts sharing a temp dir get two zips, each holding its
+    own sources: a zip newer than one checkout's sources but built
+    from another checkout is never shipped as that checkout's code."""
+    import os
+    import tempfile
+    import zipfile
+
+    from multi_crm_cross_sell_spark import session as sess
+
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path / "tmp"))
+    (tmp_path / "tmp").mkdir()
+    zips = []
+    for name in ("old", "new"):
+        pkg = tmp_path / name / "multi_crm_cross_sell_spark"
+        pkg.mkdir(parents=True)
+        (pkg / "__init__.py").write_text(f"CHECKOUT = {name!r}\n")
+        os.utime(pkg / "__init__.py", (1e9, 1e9))
+        zips.append(sess._package_zip(str(tmp_path / name)))
+    assert zips[0] != zips[1]
+    for name, path in zip(("old", "new"), zips):
+        with zipfile.ZipFile(path) as z:
+            src = z.read("multi_crm_cross_sell_spark/__init__.py").decode()
+        assert src == f"CHECKOUT = {name!r}\n"
 
 
 def test_compact_final_line_fits_budget_and_carries_per_query():

@@ -206,6 +206,37 @@ def test_stateful_queries_stream_on_slots(spark, caller, name):
     assert parent.conf.getAll == before
 
 
+def test_stream_session_reuses_one_child(spark, caller):
+    """Repeated stateful runs from one caller stream on one child, and
+    the child follows the caller's streaming listeners as they change
+    between calls. Each later run adds only the one listener bus that
+    Spark itself registers on the SparkContext for every stateful
+    query it starts (a JVM-only ``groupBy().count()`` stream adds it
+    too); a fresh child per call added a second."""
+    from multi_crm_cross_sell_spark.plans import all_queries
+    from multi_crm_cross_sell_spark.streaming.stateful import stream_session
+
+    parent, listener = caller
+    assert stream_session(parent) is stream_session(parent)
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    run = all_queries()["stateful_running_totals"].fn
+    sizes = []
+    for _ in range(3):
+        assert run(parent, SF).count() > 0
+        _drain_listeners(spark)
+        sizes.append(bus.listeners().size())
+    assert sizes[1] - sizes[0] <= 1 and sizes[2] - sizes[1] <= 1
+
+    parent.streams.removeListener(listener)
+    late = _StatePartitions()
+    parent.streams.addListener(late)
+    seen = len(listener.batches)
+    assert run(parent, SF).count() > 0
+    _drain_listeners(spark)
+    assert len(listener.batches) == seen
+    assert late.batches == [[spark.sparkContext.defaultParallelism]]
+
+
 def test_stateful_running_totals_tws(spark, events_dir, tmp_path):
     """transformWithStateInPandas twin must reproduce the
     applyInPandasWithState ground truth (requires RocksDB provider).
